@@ -65,7 +65,7 @@ def bench_cdc_ingest(spark, n_events: int, workdir: str) -> tuple[float, float]:
     cfg = SinkConfig(
         delete_mode=DeleteMode.ROW,
         n_buckets=max(32, cpus),
-        lineage_per_partition=False,  # observe()-based lineage: 1 job/batch
+        lineage_per_partition=False,  # observe()-based lineage: no extra pass
     )
     events = spark.read.parquet(log_dir)
 

@@ -109,30 +109,17 @@ class SinkConfig:
     table_name_format: str = "<topic>"
     # Physical knobs for the lake sink.
     n_buckets: int = 32
-    salt_buckets: int = 8          # hot-key salting fan-out for two-phase LWW
     auto_create: bool = True       # CREATE TABLE IF NOT EXISTS semantics (S17)
     # Lineage granularity.  False (default): global lineage is observed as
-    # a side-effect of the merge job itself (df.observe — ONE Spark job per
-    # batch, zero extra scans — the 10^10-event setting) and all buckets are
-    # treated as touched (uniform batches touch them all anyway).  True:
+    # a side-effect of the merge job itself (df.observe — zero extra scans,
+    # the 10^10-event setting; measured 3 Spark jobs for a clean batch and 4
+    # with dead letters, see perfbench/README.md "Spark jobs per batch")
+    # and all buckets are treated as touched (uniform batches touch them
+    # all anyway).  True:
     # per-source-partition offset ranges + the touched-bucket set, at the
     # cost of one extra aggregation pass over the batch — turn on for
     # sparse/selective batches or when per-partition audit lineage matters.
     lineage_per_partition: bool = False
-    # Merge-fold shuffle layout.  True: the fold's one exchange IS the sink
-    # layout — events repartition by the lake bucket and the fold groups by
-    # (_bucket, pk), so the copy-on-write writer needs no second exchange
-    # (2 shuffles → 1 per batch).  False (default): classic two-exchange
-    # plan — fold keyed on the bare pk (maximally uniform reduce
-    # partitioning), then a repartition onto the bucket layout.  MEASURED
-    # (OPTIMIZATION_r06.md): at the 8M-event bench with n_buckets=32 on 32
-    # cores the single-exchange variant is ~30% SLOWER — hashing ~n_buckets
-    # distinct bucket values into n_buckets reduce partitions leaves ~1/e
-    # of them empty and up to 3 buckets on one reducer, and the exchange it
-    # saves only moves the already-folded output (~1/8 of the rows).  True
-    # pays off only when n_buckets >> cores so bucket-hash collisions even
-    # out; keep False unless that holds.
-    fold_by_bucket: bool = False
     # Pluggable event parser — the engine's one user extension point,
     # mirroring the reference's ``event.parse.class``
     # (``TableStoreSinkConfig.java:53-54``, instantiation ``:702-710``,
@@ -167,8 +154,8 @@ class SinkConfig:
                 "delete.mode requires a record-derived primary key "
                 "(reference: TableStoreSinkConfig.java:590-593)"
             )
-        if self.n_buckets < 1 or self.salt_buckets < 1:
-            raise ValueError("bucket counts must be >= 1")
+        if self.n_buckets < 1:
+            raise ValueError("n_buckets must be >= 1")
 
     def table_for_topic(self, topic: str) -> str:
         """Topic→table routing (reference: ``TableStoreSinkConfig.java:715-737``)."""

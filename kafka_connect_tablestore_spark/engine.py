@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 
 from kafka_connect_tablestore_spark.config import RuntimeErrorTolerance, SinkConfig
 from kafka_connect_tablestore_spark.functions.hashing import bucket_of, cast_pk_columns
-from kafka_connect_tablestore_spark.lake.table import LakeTable
+from kafka_connect_tablestore_spark.lake.table import (
+    LakeTable,
+    lineage_aggs,
+    partition_lineage,
+)
 from kafka_connect_tablestore_spark.operators.rowchange import (
     ERROR_COL,
     ToleranceError,
@@ -72,34 +76,12 @@ class CdcEngine:
 
         clean, errant = split_errant(classified)
 
-        is_clean = F.col(ERROR_COL).isNull()
-        stats = (
-            classified.groupBy("partition")
-            .agg(
-                F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
-                F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
-                F.count(F.when(is_clean, F.lit(1))).alias("rows"),
-                F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
-                F.collect_set(
-                    F.when(
-                        is_clean,
-                        bucket_of(self.config.pk_fields, self.config.n_buckets),
-                    )
-                ).alias("buckets"),
-            )
-            .collect()
+        lineage, touched = partition_lineage(
+            classified,
+            F.col(ERROR_COL).isNull(),
+            bucket_of(self.config.pk_fields, self.config.n_buckets),
         )
-        lineage = {
-            str(r["partition"]): {
-                "start_offset": r["start_offset"],
-                "end_offset": r["end_offset"],
-                "rows": r["rows"],
-                "errant_rows": r["errant_rows"],
-            }
-            for r in stats
-        }
-        touched = sorted({b for r in stats for b in r["buckets"] if b is not None})
-        n_errant = sum(r["errant_rows"] for r in stats)
+        n_errant = sum(p["errant_rows"] for p in lineage.values())
         if n_errant and self.config.tolerance is RuntimeErrorTolerance.NONE:
             # tolerance gate AFTER the stats pass, which already counted the
             # errants — a standalone enforce_tolerance probe would re-scan
@@ -114,13 +96,16 @@ class CdcEngine:
         return self.table.merge_batch(clean, batch_id, lineage=lineage, touched=touched)
 
     def _apply_batch_observed(self, classified, batch_id: str) -> dict:
-        """High-throughput path: EXACTLY one Spark job per clean batch.
+        """High-throughput path: no lineage pass of its own.
 
         The lineage aggregates (offset range, clean/errant counts) ride the
         merge job itself via ``Dataset.observe`` on the pre-split frame — no
         extra scan.  Every bucket is treated as touched (the uniform-batch
         case this path is built for).  A DLQ pass runs only when the
-        observation reports errants, so clean batches pay zero extra jobs.
+        observation reports errants.  Measured (``perfbench/README.md``,
+        "Spark jobs per batch"): a clean batch runs 3 Spark jobs, because
+        AQE submits each shuffle map stage as its own job, and a batch with
+        dead letters runs 4, the DLQ append being the fourth.
 
         Ordering contract (reference: errants are reported and the task
         failed *before* Connect commits offsets, ``TableStoreSinkTask.java:
@@ -134,49 +119,15 @@ class CdcEngine:
         """
         from pyspark.sql.observation import Observation
 
-        is_clean = F.col(ERROR_COL).isNull()
         obs = Observation(f"lineage-{batch_id}")
-        observed = classified.observe(
-            obs,
-            F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
-            F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
-            F.count(F.when(is_clean, F.lit(1))).alias("rows"),
-            F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
-        )
+        observed = classified.observe(obs, *lineage_aggs(F.col(ERROR_COL).isNull()))
         clean, errant = split_errant(observed)
 
-        def _lineage_row() -> dict:
-            # The data-write job has run, so the observation normally fires
-            # within milliseconds (listener-bus delivery is async).  Guard
-            # with a bounded poll: if the metrics never arrive (e.g. the
-            # executed plan landed on a different SparkSession than the one
-            # the Observation listener is registered on), fall back to one
-            # direct aggregate job instead of blocking forever.
-            import time as _time
-
-            deadline = _time.time() + 10.0
-            while _time.time() < deadline:
-                # ``obs._jo.getRowOrEmpty()`` is a PySpark-private JVM probe
-                # (verified on the pinned Spark 4.1.2); guard it so a Spark
-                # upgrade that removes it degrades to the direct-aggregate
-                # fallback instead of crashing inside before_commit.
-                try:
-                    if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
-                        return dict(obs.get)
-                except Exception:
-                    break
-                _time.sleep(0.05)
-            row = classified.agg(
-                F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
-                F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
-                F.count(F.when(is_clean, F.lit(1))).alias("rows"),
-                F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
-            ).first()
-            return row.asDict()
-
         def before_commit(manifest: dict) -> None:
-            # the data-write job has run ⇒ the observation has fired
-            lineage = {"_global": _lineage_row()}
+            # the data-write job has run, so the observation has fired; the
+            # target is read on the batch's own session (see merge_batch),
+            # where the Observation listener is registered
+            lineage = {"_global": obs.get}
             n_errant = lineage["_global"]["errant_rows"]
             if n_errant:
                 if self.config.tolerance is RuntimeErrorTolerance.NONE:

@@ -37,7 +37,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_tablestore_spark.config import SinkConfig
@@ -58,6 +58,43 @@ SHA_COL = "content_sha256"
 #: attribute-column count cap per table, mirroring the reference's column
 #: count limit check (``utils/ParamChecker.java:75-97``).
 MAX_ATTR_COLUMNS = 128
+
+
+def lineage_aggs(is_clean: Column) -> list[Column]:
+    """The batch lineage aggregates — clean offset range plus clean/errant
+    row counts — defined once for both lineage shapes: the per-partition
+    ``groupBy`` pass (:func:`partition_lineage`) and the ``observe()``
+    that rides the merge job (``CdcEngine._apply_batch_observed``)."""
+    return [
+        F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
+        F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
+        F.count(F.when(is_clean, F.lit(1))).alias("rows"),
+        F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
+    ]
+
+
+def partition_lineage(
+    frame: DataFrame, is_clean: Column, bucket: Column
+) -> tuple[dict, list[int]]:
+    """One stats pass over a batch: per-source-partition
+    :func:`lineage_aggs` plus the set of lake buckets its clean rows touch
+    (a config-bounded collect).  Returns ``(lineage, touched)``."""
+    stats = (
+        frame.groupBy("partition")
+        .agg(
+            *lineage_aggs(is_clean),
+            F.collect_set(F.when(is_clean, bucket)).alias("buckets"),
+        )
+        .collect()
+    )
+    lineage = {
+        str(r["partition"]): {
+            k: r[k] for k in ("start_offset", "end_offset", "rows", "errant_rows")
+        }
+        for r in stats
+    }
+    touched = sorted({b for r in stats for b in r["buckets"] if b is not None})
+    return lineage, touched
 
 
 class TableValidationError(ValueError):
@@ -562,31 +599,12 @@ class LakeTable:
         pk = list(self.config.pk_fields)
         attr_fields = tuple(new_schema.keys())
 
-        src = clean_events.withColumn(
-            "_bucket", bucket_of(self.config.pk_fields, self.config.n_buckets)
-        )
         if lineage is None or touched is None:
-            # one combined stats pass: per-partition offset ranges + row
-            # counts + the touched-bucket set (config-bounded collect)
-            stats = (
-                src.groupBy("partition")
-                .agg(
-                    F.min("offset").alias("start_offset"),
-                    F.max("offset").alias("end_offset"),
-                    F.count(F.lit(1)).alias("rows"),
-                    F.collect_set("_bucket").alias("buckets"),
-                )
-                .collect()
+            lineage, touched = partition_lineage(
+                clean_events,
+                F.lit(True),
+                bucket_of(self.config.pk_fields, self.config.n_buckets),
             )
-            lineage = {
-                str(r["partition"]): {
-                    "start_offset": r["start_offset"],
-                    "end_offset": r["end_offset"],
-                    "rows": r["rows"],
-                }
-                for r in stats
-            }
-            touched = sorted({b for r in stats for b in r["buckets"]})
         old_buckets: dict[str, list[str]] = snap["buckets"]
         target_dirs = [d for b in touched for d in old_buckets.get(str(b), [])]
         # Read the target side on the SAME session as the incoming batch.
@@ -600,7 +618,7 @@ class LakeTable:
         )
 
         ev = align_to_schema(
-            src, new_schema, pk + ["commit_ts", "offset", "op", "_bucket"]
+            clean_events, new_schema, pk + ["commit_ts", "offset", "op"]
         )
         sha = (
             content_sha256("content")
@@ -608,36 +626,11 @@ class LakeTable:
             else F.lit(None).cast("string")
         )
         npart = min(self.config.n_buckets, max(len(touched), 1))
-        if self.config.fold_by_bucket:
-            # single-exchange fold (guide §2.4): repartition the unioned
-            # events ONCE by the lake bucket and group by (_bucket, pk) —
-            # HashPartitioning(_bucket) satisfies the aggregation's
-            # ClusteredDistribution(_bucket, pk), and the fold's output is
-            # already laid out for partitionBy(_bucket), so the writer adds
-            # no second exchange.  _bucket = hash(pk) % n never splits a
-            # key, so the groups are identical to a bare groupBy(pk).
-            tgt = (
-                None
-                if target is None
-                else target.withColumn(
-                    "_bucket",
-                    bucket_of(self.config.pk_fields, self.config.n_buckets),
-                )
-            )
-            merged = merge_into_state(
-                tgt, ev, self.config, attr_fields, emit_meta=True,
-                group_extra=("_bucket",), pre_partition=npart,
-            )
-            out = merged.withColumn(SHA_COL, F.when(~F.col("_deleted"), sha))
-        else:
-            merged = merge_into_state(
-                target, ev.drop("_bucket"), self.config, attr_fields,
-                emit_meta=True,
-            )
-            out = merged.withColumn(SHA_COL, F.when(~F.col("_deleted"), sha))
-            out = out.withColumn(
-                "_bucket", bucket_of(self.config.pk_fields, self.config.n_buckets)
-            ).repartition(npart, "_bucket")
+        merged = merge_into_state(target, ev, self.config, attr_fields, emit_meta=True)
+        out = merged.withColumn(SHA_COL, F.when(~F.col("_deleted"), sha))
+        out = out.withColumn(
+            "_bucket", bucket_of(self.config.pk_fields, self.config.n_buckets)
+        ).repartition(npart, "_bucket")
 
         # --- copy-on-write: write only touched buckets ----------------------
         version = snap["version"] + 1
@@ -870,21 +863,6 @@ class LakeTable:
         }
         self._commit(meta)
         return {"version": new_version, "rolled_back_to": version}
-
-    def amend_lineage(self, batch_id: str, lineage: dict) -> None:
-        """Attach post-hoc lineage metrics (from ``Dataset.observe``) to an
-        already-committed batch as a sidecar — the snapshot itself stays
-        immutable."""
-        d = os.path.join(self.dir, "lineage")
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f"{batch_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(lineage, f)
-        os.rename(tmp, os.path.join(d, f"{batch_id}.json"))
-
-    def read_lineage(self, batch_id: str) -> dict | None:
-        p = os.path.join(self.dir, "lineage", f"{batch_id}.json")
-        return json.load(open(p)) if os.path.exists(p) else None
 
     # ----------------------------------------------------------------- dlq
     def append_dlq(self, dlq_df: DataFrame, batch_id: str) -> None:

@@ -46,6 +46,18 @@ def _fold_dot(a, b) -> float:
     return s
 
 
+def _sql_double(x) -> str:
+    """SQL text of one double literal.  Finite values are ``repr(x)D``;
+    NaN and ±Inf have no numeric literal form (``nanD`` would parse as a
+    column name), so they are spelled as the string casts Spark accepts."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+
+
 def _lit_vec(xs) -> "F.Column":
     """``array<double>`` literal built by the SQL parser in ONE py4j call.
     ``F.lit(list)`` constructs the tree element-by-element over py4j —
@@ -57,7 +69,7 @@ def _lit_vec(xs) -> "F.Column":
     bit-identical."""
     if not xs:
         return F.lit([]).cast("array<double>")
-    return F.expr("array(" + ",".join(repr(float(x)) + "D" for x in xs) + ")")
+    return F.expr("array(" + ",".join(_sql_double(x) for x in xs) + ")")
 
 
 def _lit_mat(rows) -> "F.Column":
@@ -68,7 +80,7 @@ def _lit_mat(rows) -> "F.Column":
     return F.expr(
         "array("
         + ",".join(
-            "array(" + ",".join(repr(float(x)) + "D" for x in r) + ")"
+            "array(" + ",".join(_sql_double(x) for x in r) + ")"
             for r in rows
         )
         + ")"

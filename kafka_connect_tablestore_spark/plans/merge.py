@@ -60,8 +60,6 @@ def fold_state(
     config: SinkConfig,
     attr_fields: tuple[str, ...] = ("commit", "lang", "content"),
     emit_meta: bool = False,
-    group_extra: tuple[str, ...] = (),
-    pre_partition: int | None = None,
 ) -> DataFrame:
     """Fold clean change events into final state, one row per surviving key.
 
@@ -70,25 +68,10 @@ def fold_state(
     Output: ``pk_fields + attr_fields`` for keys that exist after the fold;
     with ``emit_meta`` every key is emitted (deleted ones flagged) plus the
     META_COLS version columns, for tombstone-retaining sinks.
-
-    ``group_extra``: extra grouping columns that are FUNCTIONS OF THE KEY
-    (e.g. the lake's ``_bucket = hash(pk) % n``) — they never change the
-    groups, but they flow through to the output and, combined with
-    ``pre_partition``, let the fold's one exchange BE the sink's layout:
-    ``repartition(n, *group_extra)`` followed by
-    ``groupBy(*group_extra, *pk)`` satisfies the aggregation's required
-    distribution (HashPartitioning on a subset of the grouping keys), so
-    Catalyst plans no second exchange and a ``partitionBy(*group_extra)``
-    write needs no further repartition (guide §2.4: two operations keyed
-    the same way share one exchange).
     """
     if config.column_whitelist is not None:
         attr_fields = tuple(f for f in attr_fields if f in config.column_whitelist)
     pk = list(config.pk_fields)
-    if pre_partition:
-        events = events.repartition(
-            pre_partition, *[F.col(c) for c in group_extra]
-        )
     op = F.col("op")
     is_upd = op == F.lit("UPDATE")
     is_bar = ~is_upd  # PUT or DELETE
@@ -110,7 +93,7 @@ def fold_state(
             ).alias(f"_w_{c}")
         )
 
-    g = events.groupBy(*group_extra, *pk).agg(*aggs)
+    g = events.groupBy(*pk).agg(*aggs)
 
     bar_ord, upd_ord = F.col("_bar_ord"), F.col("_upd_ord")
     exists = (
@@ -123,8 +106,7 @@ def fold_state(
         w = F.col(f"_w_{c}")
         return F.when(w.isNotNull() & (w["op"] != F.lit("DELETE")), w["v"])
 
-    out_cols: list[Column] = [F.col(c) for c in group_extra]
-    out_cols += [F.col(c) for c in pk]
+    out_cols: list[Column] = [F.col(c) for c in pk]
     if not emit_meta:
         out_cols += [final(c).alias(c) for c in attr_fields]
         return g.where(exists).select(*out_cols)
@@ -147,8 +129,6 @@ def merge_into_state(
     config: SinkConfig,
     attr_fields: tuple[str, ...] = ("commit", "lang", "content"),
     emit_meta: bool = False,
-    group_extra: tuple[str, ...] = (),
-    pre_partition: int | None = None,
 ) -> DataFrame:
     """MERGE a batch of clean events into existing ``target`` state.
 
@@ -163,16 +143,12 @@ def merge_into_state(
     if config.column_whitelist is not None:
         attr_fields = tuple(f for f in attr_fields if f in config.column_whitelist)
     pk = list(config.pk_fields)
-    gx = list(group_extra)
-    ev = events.select(*gx, *pk, *ORD_COLS, "op", *attr_fields)
+    ev = events.select(*pk, *ORD_COLS, "op", *attr_fields)
     if target is None:
-        return fold_state(
-            ev, config, attr_fields, emit_meta, group_extra, pre_partition
-        )
+        return fold_state(ev, config, attr_fields, emit_meta)
     has_meta = all(c in target.columns for c in META_COLS)
     if has_meta:
         virt = target.select(
-            *gx,
             *pk,
             F.col("_ver_ts").alias("commit_ts"),
             F.col("_ver_off").alias("offset"),
@@ -181,14 +157,10 @@ def merge_into_state(
         )
     else:
         virt = target.select(
-            *gx,
             *pk,
             F.lit(-1).cast("long").alias("commit_ts"),
             F.lit(-1).cast("long").alias("offset"),
             F.lit("PUT").alias("op"),
             *[F.col(c) for c in attr_fields],
         )
-    return fold_state(
-        virt.unionByName(ev), config, attr_fields, emit_meta, group_extra,
-        pre_partition,
-    )
+    return fold_state(virt.unionByName(ev), config, attr_fields, emit_meta)

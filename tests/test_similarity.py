@@ -801,3 +801,94 @@ def test_ivf_family_probe_plans_carry_no_pair_dedup_shuffle(spark, tmp_path):
 
     graph_plan = final_plan(knn_graph(df, k=3, n_cells=8, train="first"))
     assert "keys=[query_id" not in graph_plan  # distributed join, still dedup-free
+
+
+def test_lit_vec_and_mat_render_nan_and_inf_like_f_lit(spark):
+    """The SQL-parser literal path must carry NaN/±Inf as values (a bare
+    ``nanD``/``infD`` would parse as a column name) and evaluate to the
+    same doubles as ``F.lit``; finite values keep their ``repr(x)D`` text."""
+    from kafka_connect_tablestore_spark.operators.similarity import (
+        _lit_mat,
+        _lit_vec,
+        _sql_double,
+    )
+
+    vec = [1.5, float("nan"), float("inf"), -float("inf"), -0.25]
+    mat = [[float("nan"), 2.0], [-float("inf"), float("inf")]]
+    row = spark.range(1).select(
+        _lit_vec(vec).alias("v"),
+        _lit_mat(mat).alias("m"),
+        F.array(*[F.lit(x) for x in vec]).alias("v_lit"),
+        F.array(*[F.array(*[F.lit(x) for x in r]) for r in mat]).alias("m_lit"),
+    ).first()
+
+    def same(a, b):
+        return len(a) == len(b) and all(
+            (math.isnan(x) and math.isnan(y)) or x == y for x, y in zip(a, b)
+        )
+
+    assert same(row["v"], vec) and same(row["v"], row["v_lit"])
+    assert all(same(g, w) for g, w in zip(row["m"], mat)) and len(row["m"]) == 2
+    assert all(same(g, w) for g, w in zip(row["m"], row["m_lit"]))
+    assert [_sql_double(x) for x in (0.1, -3.0, 1e300)] == ["0.1D", "-3.0D", "1e+300D"]
+
+
+def _tie_corpus(spark):
+    """dim=4 corpus whose first two vectors are the 'first' coarse centroids
+    and whose third sits at exactly equal distance from both — the
+    first-min argmin tie the driver-side replay must break like
+    ``ivf_assign`` (lowest cell)."""
+    vecs = [
+        [1.0, 0.0, 0.0, 0.0],
+        [0.0, 1.0, 0.0, 0.0],
+        [1.0, 1.0, 0.0, 0.0],  # tie: equidistant from cells 0 and 1
+        [0.5, -0.25, 2.0, 1.0],
+        [0.2, 0.9, -0.3, 0.1],
+        [-1.0, 0.4, 0.3, 0.7],
+        [0.3, 0.3, 0.3, -0.9],
+        [0.8, -0.6, 0.1, 0.2],
+    ]
+    return spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
+    )
+
+
+def test_ann_ivfpq_first_replay_matches_expression_side_codebooks(
+    spark, monkeypatch
+):
+    """``ann_ivfpq_topk(train='first')`` derives its PQ codebooks on the
+    driver from one collect; they must equal, bit for bit, the codebooks
+    ``train_pq_codebooks(train='first')`` builds from the expression-side
+    (residual or raw) vectors, for both encode modes."""
+    from kafka_connect_tablestore_spark.operators import similarity as sim
+
+    df = _tie_corpus(spark).cache()
+    n_cells, m, n_codes, dim = 2, 2, 4, 4
+    centroids = [
+        [float(x) for x in r["embedding"]]
+        for r in df.orderBy("vec_id").limit(n_cells).collect()
+    ]
+    cell = df.where("vec_id = 2").select(
+        sim.ivf_assign(F.col("embedding"), centroids).alias("c")
+    ).first()["c"]
+    assert cell == 0  # the fixture really exercises the tie
+
+    real_plan = sim._ivfpq_corpus_plan
+    for encode in ("residual", "raw"):
+        seen = []
+
+        def spy(*args, **kwargs):
+            seen.append(kwargs["codebooks"])
+            return real_plan(*args, **kwargs)
+
+        monkeypatch.setattr(sim, "_ivfpq_corpus_plan", spy)
+        sim.ann_ivfpq_topk(
+            df, df.where("vec_id < 2"), k=2, n_cells=n_cells, m=m,
+            n_codes=n_codes, dim=dim, nprobe=1, train="first", encode=encode,
+        )
+        monkeypatch.setattr(sim, "_ivfpq_corpus_plan", real_plan)
+        _, want = real_plan(
+            df, centroids, m, n_codes, dim, "vec_id", "embedding", "first",
+            encode,
+        )
+        assert seen == [want], encode
