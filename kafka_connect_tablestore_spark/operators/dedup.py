@@ -1303,18 +1303,13 @@ def build_bloom_index(
     bounded by m_bits/64 output rows however many appends accumulated) —
     bitwise OR is associative/idempotent, so replayed appends are
     harmless.  :func:`compact_bloom_index` rewrites to one row per word."""
-    import json
-    import os
+    from .index_maint import write_json_atomic
 
     _bloom_validate(m_bits, k)
     build_bloom_bitset(prior, m_bits, k, text_col).write.mode(
         "overwrite"
     ).parquet(path)
-    meta_tmp = path.rstrip("/") + ".meta.tmp"
-    meta = path.rstrip("/") + ".meta"
-    with open(meta_tmp, "w") as f:
-        json.dump({"m_bits": m_bits, "k": k}, f)
-    os.replace(meta_tmp, meta)
+    write_json_atomic(path.rstrip("/") + ".meta", {"m_bits": m_bits, "k": k})
 
 
 def _bloom_meta(path: str) -> tuple[int, int]:

@@ -47,6 +47,7 @@ The streaming drivers in streaming/pipeline.py never call it implicitly.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -63,6 +64,23 @@ INDEX_PARTITION_COLS = {
     "ivfpq": "cell",
     "semantic": "cell",
 }
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` so a reader sees the old file or
+    the whole new one, never a torn write: tmp file, fsync, then
+    ``os.replace``.  Every index sidecar goes through here (params,
+    centroids, meta, the streams' batch and staged markers).  The fsync
+    matters because a marker gates replay and must not be less durable
+    than the data it marks; the ``makedirs`` because a sidecar may be the
+    first file written under a fresh index path."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def ensure_index_params(
@@ -82,10 +100,8 @@ def ensure_index_params(
     no single-threshold run.  Builders therefore call this with
     ``overwrite=True`` (a rebuild legitimately re-defines the contract,
     exactly as it overwrites the index itself); probe/append paths and the
-    streaming wrappers validate-or-freeze.  Sidecar writes are tmp +
-    rename (the manifest pattern)."""
-    import json
-
+    streaming wrappers validate-or-freeze.  The sidecar is written by
+    :func:`write_json_atomic`."""
     pfile = index_path.rstrip("/") + ".params.json"
     if not overwrite and os.path.exists(pfile):
         with open(pfile) as f:
@@ -97,10 +113,7 @@ def ensure_index_params(
                 "parameters or rebuild at a fresh index path"
             )
         return
-    tmp = pfile + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f, sort_keys=True)
-    os.replace(tmp, pfile)
+    write_json_atomic(pfile, dict(sorted(params.items())))
 
 
 def _data_files(path: str) -> list[str]:

@@ -8,6 +8,10 @@ the LakeTable's batch manifest owning sink idempotency — together: end-to-end
 exactly-once (at-least-once redelivery from the checkpoint × idempotent
 batch_id commit = effectively-once).
 
+The seven persisted indexes apply the same rule through one per-batch
+driver, :func:`_index_stream`: each stream supplies only its ``step``, and
+states next to it why that step is safe to re-run after a crash.
+
 In production the source line is ``spark.readStream.format("kafka")``; tests
 use a file-stream source over the same change-log schema (no Kafka broker in
 the sandbox), which exercises identical semantics.
@@ -19,34 +23,35 @@ import json
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_connect_tablestore_spark.engine import CdcEngine
+
+# the params sidecar guard lives on the index API itself (the batch
+# build/probe/append functions call it too — the hazard it closes is not
+# streaming-specific); the streams validate-or-freeze before touching
+# any per-batch state
+from kafka_connect_tablestore_spark.operators.index_maint import (
+    ensure_index_params as _ensure_index_params,
+    write_json_atomic,
+)
 
 
 def _manifest_io(manifest_dir: str):
     """The sidecar batch-manifest protocol, defined ONCE for every stream:
     ``committed(batch_id)`` tests for ``<dir>/<batch_id>.json``;
-    ``commit(batch_id, **fields)`` writes it atomically (tmp + rename,
-    the LakeTable pattern) with ``batch_id`` plus the stream's own
-    payload fields.  A protocol change (fsync policy, marker layout)
-    lands here once instead of once per stream."""
+    ``commit(batch_id, **fields)`` writes it through ``write_json_atomic``
+    with ``batch_id`` plus the stream's own payload fields."""
+
+    def _marker(batch_id: int) -> str:
+        return os.path.join(manifest_dir, f"{batch_id}.json")
 
     def committed(batch_id: int) -> bool:
-        return os.path.exists(os.path.join(manifest_dir, f"{batch_id}.json"))
+        return os.path.exists(_marker(batch_id))
 
     def commit(batch_id: int, **fields) -> None:
-        os.makedirs(manifest_dir, exist_ok=True)
-        final = os.path.join(manifest_dir, f"{batch_id}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, **fields}, f)
-            f.flush()
-            os.fsync(f.fileno())  # the marker gates replay: it must not
-            # survive LESS durably than the data it marks (power loss
-            # dropping a Bloom staged marker after the index append
-            # persisted would false-flag the whole replayed batch)
-        os.replace(tmp, final)
+        write_json_atomic(_marker(batch_id), {"batch_id": batch_id, **fields})
 
     return committed, commit
 
@@ -78,14 +83,6 @@ def _start_query(
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
 
-
-# the params sidecar guard lives on the index API itself (the batch
-# build/probe/append functions call it too — the hazard it closes is not
-# streaming-specific); the streams validate-or-freeze before touching
-# any per-batch state
-from kafka_connect_tablestore_spark.operators.index_maint import (  # noqa: E402
-    ensure_index_params as _ensure_index_params,
-)
 
 
 def start_cdc_stream(
@@ -156,6 +153,58 @@ def kafka_source_plan(spark, bootstrap: str, topic: str) -> DataFrame:
     ).select("topic", "partition", "offset", "commit_ts", "v.*")
 
 
+
+def _index_stream(index_path: str, cols, count_key: str, empty: dict, step):
+    """The ``foreachBatch`` function every index stream runs.  It owns the
+    steps the streams share:
+
+    1. return at once if ``<index>.batches/<batch_id>.json`` exists (a
+       checkpoint-replayed batch that already committed);
+    2. pin the batch's ``cols`` with ``localCheckpoint(eager=True)`` and
+       count them, so the stream's work reads one materialized copy;
+    3. an empty batch commits ``empty`` and touches nothing else; otherwise
+       ``step(rows, n, batch_id)`` does the stream's own work and returns
+       its marker fields;
+    4. commit ``{"batch_id", count_key: n, **fields}`` through the
+       manifest.
+
+    A crash anywhere before step 4 re-delivers the batch and re-runs
+    ``step`` from the top, so a ``step`` must give the clean run's output
+    when re-run after a crash at any of its own writes.  Each stream
+    states why its ``step`` does, next to it."""
+    committed, commit = _manifest_io(index_path.rstrip("/") + ".batches")
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if committed(batch_id):
+            return
+        rows = batch_df.select(*cols).localCheckpoint(eager=True)
+        n = rows.count()
+        fields = step(rows, n, batch_id) if n else empty
+        commit(batch_id, **{count_key: n, **fields})
+
+    return _apply
+
+
+def _slice_dir(root: str, batch_id: int) -> str:
+    return os.path.join(root, f"batch_id={batch_id}")
+
+
+def _read_json(path: str):
+    with open(path) as f:
+        return json.load(f)
+
+
+def _require_first_batch(n: int, need: int, name: str, trains: str) -> None:
+    """Refuse a batch 0 too small to train the index's quantizer: training
+    fewer centroids than asked would permanently cripple the index (every
+    later vector squeezes into the few cells batch 0 happened to carry)."""
+    if n < need:
+        raise ValueError(
+            f"first micro-batch must carry at least {name}={need} vectors to "
+            f"train {trains} (got {n}); lower {name} or enlarge batch 0"
+        )
+
+
 def start_lsh_index_stream(
     docs_stream: DataFrame,
     index_path: str,
@@ -170,38 +219,24 @@ def start_lsh_index_stream(
     processing_time: str | None = None,
     query_name: str = "lsh-index-ingest",
 ) -> StreamingQuery:
-    """Maintain the persisted MinHash-LSH index from a document stream —
-    the daily-ingest loop the incremental indexes exist for, run end-to-end
-    under the streaming engine instead of a hand-driven batch loop.
+    """Maintain the persisted MinHash-LSH index from a document stream.
 
-    Per micro-batch, in order:
+    Per micro-batch: write every candidate near-dup pair the batch forms
+    against the indexed corpus and within itself
+    (``incremental_lsh_pairs``; first batch: ``minhash_lsh_pairs``) to
+    ``pairs_path/batch_id=N`` with ``overwrite``, then append the batch's
+    banded signature rows (first batch: ``build_lsh_index``).  Marker
+    fields: ``n_docs``, ``n_pairs``.
 
-    1. probe: emit every candidate near-dup pair the batch forms against
-       the already-indexed corpus AND within itself
-       (``incremental_lsh_pairs``; first batch: within-batch pairs only),
-       written to ``pairs_path/batch_id=N`` with ``overwrite`` — re-running
-       a batch rewrites, never duplicates, its pair slice;
-    2. index: append the batch's banded signature rows
-       (``append_to_lsh_index``; first batch: ``build_lsh_index``);
-    3. commit: atomically record the batch id in a sidecar manifest
-       (tmp + rename, the LakeTable pattern) so a checkpoint-replayed batch
-       is a no-op.
-
-    Crash-safety argument: a crash inside the window between step 2 and
-    step 3 makes the replay re-append the batch's signature rows. Duplicate
-    index rows cost only space, never correctness — pair emission ends in
-    ``.distinct()`` and (min,max)-id orientation, so a batch probed against
-    an index that already contains its own rows emits the identical pair
-    set. Union-of-emitted-pairs therefore always equals the full-corpus
-    ``minhash_lsh_pairs`` restricted to pairs whose later doc has arrived:
-    each pair is emitted exactly once, by the micro-batch that completes it.
-
-    Scale shape per batch: one broadcast of the day's banded rows against a
-    band-partitioned index scan — the corpus text is never re-read, and the
-    per-batch work is independent of corpus size except for the signature
-    scan (bands × ~80 bytes/doc)."""
-    import os
-
+    Crash safety: a replay after the append re-appends the batch's rows.
+    Duplicate index rows cost only space — pair emission ends in
+    ``.distinct()`` with (min, max)-id orientation, so a batch probed
+    against an index that already holds its own rows emits the identical
+    pair set.  The union of the pair slices therefore equals the
+    full-corpus ``minhash_lsh_pairs`` restricted to arrived docs, each pair
+    emitted once, by the micro-batch that completes it.  Per-batch cost is
+    one broadcast of the batch's banded rows against a band-partitioned
+    index scan; the corpus text is never re-read."""
     from kafka_connect_tablestore_spark.operators.dedup import (
         append_to_lsh_index,
         build_lsh_index,
@@ -209,41 +244,27 @@ def start_lsh_index_stream(
         minhash_lsh_pairs,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0, n_pairs=0)
-            return
+    def step(docs: DataFrame, n: int, batch_id: int) -> dict:
         spark = docs.sparkSession
-        _ensure_index_params(
-            index_path, {"n_hashes": n_hashes, "bands": bands}
-        )
-        if os.path.exists(index_path):
+        _ensure_index_params(index_path, {"n_hashes": n_hashes, "bands": bands})
+        grow = os.path.exists(index_path)
+        if grow:
             pairs = incremental_lsh_pairs(
                 spark, index_path, docs, text_col, id_col, n_hashes, bands
             )
         else:
-            pairs = minhash_lsh_pairs(
-                docs, text_col, id_col, n_hashes, bands
-            )
-        slice_dir = os.path.join(pairs_path, f"batch_id={batch_id}")
+            pairs = minhash_lsh_pairs(docs, text_col, id_col, n_hashes, bands)
+        slice_dir = _slice_dir(pairs_path, batch_id)
         pairs.write.mode("overwrite").parquet(slice_dir)
         n_pairs = spark.read.parquet(slice_dir).count()
-        if os.path.exists(index_path):
-            append_to_lsh_index(docs, index_path, text_col, id_col,
-                                n_hashes, bands)
-        else:
-            build_lsh_index(docs, index_path, text_col, id_col,
-                            n_hashes, bands)
-        _commit(batch_id, n_docs=n_docs, n_pairs=n_pairs)
+        (append_to_lsh_index if grow else build_lsh_index)(
+            docs, index_path, text_col, id_col, n_hashes, bands
+        )
+        return {"n_pairs": n_pairs}
 
+    _apply = _index_stream(
+        index_path, (id_col, text_col), "n_docs", {"n_pairs": 0}, step
+    )
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -265,26 +286,22 @@ def start_chunk_index_stream(
 ) -> StreamingQuery:
     """Maintain the persisted chunk-fingerprint index from a document
     stream — the streaming twin of the multi-day ``incremental_chunk_dedup``
-    loop, completing the set with the LSH and semantic index streams.
+    loop.
 
     Per micro-batch: dedupe the batch's chunks against the index (plus
     within-batch first occurrences), write the per-doc result to
-    ``dedup_path/batch_id=N`` with ``overwrite`` (replay rewrites, never
-    duplicates), append the surviving fingerprints to the index (first
-    batch: ``build_chunk_index``), then commit the batch id to a sidecar
-    manifest (tmp + rename) so a checkpoint-replayed batch is a no-op.
+    ``dedup_path/batch_id=N`` with ``overwrite``, then append the surviving
+    fingerprints to the index (first batch: ``build_chunk_index``).  Marker
+    field: ``n_docs``.
 
-    Crash between append and commit re-appends the batch's fingerprint
-    rows on replay; duplicate index rows cost space, never correctness —
-    the probe EXCLUDES index rows owned by the batch's own ids before
-    forming its hit set (so the replay's verdicts are identical to the
-    original run's, never self-contaminated), and the hit set is
-    ``.distinct()`` on the fingerprint before the keep decision.
-    PRECONDITION inherited from the batch operator: ids
-    must arrive in monotone order across batches (the natural append-only
-    ingest shape) for exact equality with the full-corpus recompute."""
-    import os
-
+    Crash safety: a replay after the append re-appends the batch's
+    fingerprint rows, which cost space, never correctness — the probe
+    EXCLUDES index rows owned by the batch's own ids before forming its hit
+    set (so the replay's verdicts equal the original run's), and the hit
+    set is ``.distinct()`` on the fingerprint before the keep decision.
+    PRECONDITION inherited from the batch operator: ids arrive in monotone
+    order across batches for exact equality with the full-corpus
+    recompute."""
     from kafka_connect_tablestore_spark.operators.corpus import (
         append_to_chunk_index,
         build_chunk_index,
@@ -292,43 +309,31 @@ def start_chunk_index_stream(
         incremental_chunk_dedup,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0)
-            return
-        spark = docs.sparkSession
+    def step(docs: DataFrame, n: int, batch_id: int) -> dict:
         _ensure_index_params(
             index_path, {"chunk_words": chunk_words, "n_buckets": n_buckets}
         )
-        slice_dir = os.path.join(dedup_path, f"batch_id={batch_id}")
+        slice_dir = _slice_dir(dedup_path, batch_id)
         if os.path.exists(index_path):
             per_doc, kept = incremental_chunk_dedup(
-                spark, index_path, docs, text_col, id_col,
+                docs.sparkSession, index_path, docs, text_col, id_col,
                 chunk_words, n_buckets,
             )
             per_doc.write.mode("overwrite").parquet(slice_dir)
             append_to_chunk_index(kept, index_path)
         else:
             # batch 0 chunks the docs twice (the verdict aggregate and the
-            # index build each walk _chunk_rows) — the same bootstrap-only
-            # double cost the semantic stream documents for its first
-            # batch; every later batch shares one probe pass via
+            # index build each walk _chunk_rows) — a bootstrap-only cost;
+            # every later batch shares one probe pass via
             # incremental_chunk_dedup's checkpointed `marked` frame
             chunk_dedup(docs, text_col, id_col, chunk_words).write.mode(
                 "overwrite"
             ).parquet(slice_dir)
             build_chunk_index(docs, index_path, text_col, id_col,
                               chunk_words, n_buckets)
-        _commit(batch_id, n_docs=n_docs)
+        return {}
 
+    _apply = _index_stream(index_path, (id_col, text_col), "n_docs", {}, step)
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -349,29 +354,22 @@ def start_fingerprint_index_stream(
 ) -> StreamingQuery:
     """Maintain the persisted exact-dedup fingerprint index from a document
     stream — the streaming twin of the multi-day ``incremental_dedup_exact``
-    loop, completing the stream-driven set (LSH, chunk, semantic, view,
-    and now the exact-fingerprint index: the FIRST gate a daily crawl
-    ingest hits).
+    loop, and the first gate a daily crawl ingest hits.
 
     Per micro-batch: dedup the batch against the index plus within-batch
     first occurrences, write per-doc ``(id, fp, kept)`` verdicts to
-    ``verdicts_path/batch_id=N`` with ``overwrite`` (replay rewrites,
-    never duplicates), append the surviving fingerprints to the index
-    (first batch: ``build_fingerprint_index``), then commit the batch id
-    to the sidecar manifest (tmp + rename) so a checkpoint-replayed batch
-    is a no-op.  Crash between append and commit re-appends fingerprint
-    rows on replay; duplicate index rows cost space, never correctness —
-    the probe EXCLUDES index rows owned by the batch's own ids before
-    forming its hit set (replay verdicts are identical to the original
-    run's, never self-contaminated), and distincts the hit set before
-    the keep decision.
-    PRECONDITION inherited from the batch operator: monotone ids across
-    batches (the natural append-only ingest shape) for exact equality
-    with ``dedup_exact`` on the full corpus."""
-    import os
+    ``verdicts_path/batch_id=N`` with ``overwrite``, then append the
+    surviving fingerprints to the index (first batch:
+    ``build_fingerprint_index``).  Marker fields: ``n_docs``, ``n_kept``.
 
+    Crash safety: a replay after the append re-appends fingerprint rows,
+    which cost space, never correctness — the probe EXCLUDES index rows
+    owned by the batch's own ids before forming its hit set (replay
+    verdicts equal the original run's), and distincts the hit set before
+    the keep decision.  PRECONDITION inherited from the batch operator:
+    monotone ids across batches for exact equality with ``dedup_exact`` on
+    the full corpus."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from kafka_connect_tablestore_spark.functions.text import doc_fingerprint
     from kafka_connect_tablestore_spark.operators.dedup import (
@@ -380,45 +378,31 @@ def start_fingerprint_index_stream(
         incremental_dedup_exact,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0, n_kept=0)
-            return
-        spark = docs.sparkSession
+    def step(docs: DataFrame, n: int, batch_id: int) -> dict:
         _ensure_index_params(index_path, {"n_buckets": n_buckets})
-        slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
-        if os.path.exists(index_path):
+        grow = os.path.exists(index_path)
+        if grow:
             verdicts, kept = incremental_dedup_exact(
-                spark, index_path, docs, text_col, id_col, n_buckets
+                docs.sparkSession, index_path, docs, text_col, id_col, n_buckets
             )
-            verdicts = verdicts.localCheckpoint(eager=True)
-            verdicts.write.mode("overwrite").parquet(slice_dir)
-            append_to_fingerprint_index(kept, index_path)
-            n_kept = verdicts.where("kept").count()
         else:
             # first batch: within-batch first occurrence wins (the same
             # (fp, id-asc) row_number the incremental probe uses)
             first = Window.partitionBy("fp").orderBy(id_col)
-            verdicts = (
-                docs.select(
-                    F.col(id_col), doc_fingerprint(text_col).alias("fp")
-                )
-                .withColumn("kept", F.row_number().over(first) == 1)
-                .localCheckpoint(eager=True)
-            )
-            verdicts.write.mode("overwrite").parquet(slice_dir)
+            verdicts = docs.select(
+                F.col(id_col), doc_fingerprint(text_col).alias("fp")
+            ).withColumn("kept", F.row_number().over(first) == 1)
+        verdicts = verdicts.localCheckpoint(eager=True)
+        verdicts.write.mode("overwrite").parquet(_slice_dir(verdicts_path, batch_id))
+        if grow:
+            append_to_fingerprint_index(kept, index_path)
+        else:
             build_fingerprint_index(docs, index_path, text_col, id_col, n_buckets)
-            n_kept = verdicts.where("kept").count()
-        _commit(batch_id, n_docs=n_docs, n_kept=n_kept)
+        return {"n_kept": verdicts.where("kept").count()}
 
+    _apply = _index_stream(
+        index_path, (id_col, text_col), "n_docs", {"n_kept": 0}, step
+    )
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -439,42 +423,17 @@ def start_semantic_index_stream(
     query_name: str = "semantic-index-ingest",
 ) -> StreamingQuery:
     """Maintain the persisted SemDeDup survivor index from an embedding
-    stream — the second incremental index driven end-to-end under the
-    streaming engine (the LSH index above was the first).
+    stream.
 
-    Per micro-batch, in order:
-
-    1. dedup: compute every new vector's verdict against the index + the
-       batch itself (``incremental_semantic_dedup``; first batch: plain
-       ``semantic_dedup``), written to ``verdicts_path/batch_id=N`` with
-       ``overwrite`` — re-running a batch rewrites, never duplicates, its
-       verdict slice;
-    2. index: append the batch's SURVIVOR rows in index format
-       (``append_to_semantic_index``; first batch: ``build_semantic_index``,
-       whose 'first'-trained centroids are persisted in an atomic sidecar
-       JSON — the query-side contract every later batch reuses);
-    3. commit: record the batch id in the sidecar manifest (tmp + rename)
-       so a checkpoint-replayed batch is a no-op.
-
-    Crash-safety argument: a crash between steps 2 and 3 makes the replay
-    re-probe against an index that already holds this batch's survivors,
-    then re-append them.  The probe's id self-exclusion makes the re-probe
-    exact (a vector's own index copy never dominates it at cosine 1.0;
-    every other contaminating copy is an original-run survivor, which only
-    dominates vectors the original run killed anyway — so replay verdicts
-    are identical).  The duplicate survivor rows the re-append leaves cost
-    space, never correctness: dominance is an ANY-match against same-cell
-    index survivors, so a duplicated survivor produces identical verdicts.
-    Under the monotone-id ingest precondition the union of verdict slices
-    equals full-corpus ``semantic_dedup`` restricted to arrived ids — the
-    greedy scan is prefix-stable, so each vector's verdict is final the
-    micro-batch it arrives (the `incremental_semantic_dedup` docstring
-    carries the proof sketch).
-
-    First-batch cost note: batch 0 runs the greedy fixpoint twice (once
-    for verdicts, once inside ``build_semantic_index``) — bounded, one-time,
-    and kept in exchange for a single authoritative writer of the index
-    row format."""
+    Per micro-batch: compute every new vector's verdict against the index
+    and the batch itself (``incremental_semantic_dedup``; first batch:
+    plain ``semantic_dedup``), write it to ``verdicts_path/batch_id=N``
+    with ``overwrite``, then append the batch's SURVIVOR rows in index
+    format (first batch: ``build_semantic_index``, whose 'first'-trained
+    centroids are frozen in the ``<index>.centroids.json`` sidecar — the
+    query-side contract every later batch reuses).  Marker fields:
+    ``n_vecs``, ``n_survivors``.  The protocol and its crash-safety
+    argument live on :func:`_make_semantic_apply`."""
     _apply = _make_semantic_apply(
         index_path, verdicts_path, threshold, n_cells, id_col, vec_col
     )
@@ -493,16 +452,26 @@ def _make_semantic_apply(
     vec_col: str,
 ):
     """Build the per-micro-batch apply function for the semantic index
-    stream.
+    stream (module-level so the batch-0 guard ordering is directly
+    testable).
 
-    Module-level (rather than a closure inside the stream starter) so the
-    batch-0 guard ordering is directly testable: a failed batch 0 (too few
-    vectors to train ``n_cells`` centroids) must NOT leave a params sidecar
-    behind — see ``start_semantic_index_stream``'s docstring for the full
-    protocol."""
-    import json
-    import os
+    Crash safety: a replay after the append re-probes an index that already
+    holds this batch's survivors, then re-appends them.  The probe's id
+    self-exclusion makes the re-probe exact (a vector's own index copy
+    never dominates it at cosine 1.0; every other contaminating copy is an
+    original-run survivor, which only dominates vectors the original run
+    killed anyway).  The duplicate survivor rows cost space, never
+    correctness: dominance is an ANY-match against same-cell index
+    survivors.  A batch 0 that crashed before its centroids sidecar landed
+    has no sidecar, so its replay rebuilds the index from scratch.  Under
+    the monotone-id ingest precondition the union of verdict slices equals
+    full-corpus ``semantic_dedup`` restricted to arrived ids — the greedy
+    scan is prefix-stable (the ``incremental_semantic_dedup`` docstring
+    carries the proof sketch).
 
+    Batch 0 runs the greedy fixpoint twice (once for verdicts, once inside
+    ``build_semantic_index``) — bounded, one-time, and kept in exchange for
+    a single authoritative writer of the index row format."""
     from kafka_connect_tablestore_spark.operators.similarity import (
         append_to_semantic_index,
         build_semantic_index,
@@ -510,27 +479,11 @@ def _make_semantic_apply(
         semantic_dedup,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
     centroids_file = index_path.rstrip("/") + ".centroids.json"
 
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _save_centroids(centroids) -> None:
-        tmp = centroids_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(centroids, f)
-        os.replace(tmp, centroids_file)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        vecs = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        n_vecs = vecs.count()
-        if n_vecs == 0:
-            _commit(batch_id, n_vecs=0, n_survivors=0)
-            return
+    def step(vecs: DataFrame, n_vecs: int, batch_id: int) -> dict:
         spark = vecs.sparkSession
-        slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
+        slice_dir = _slice_dir(verdicts_path, batch_id)
         if os.path.exists(centroids_file):
             # validate against the frozen sidecar (batch 0 wrote it AFTER
             # its own guards passed — freezing before the batch-0 n_vecs
@@ -540,10 +493,8 @@ def _make_semantic_apply(
             _ensure_index_params(
                 index_path, {"threshold": threshold, "n_cells": n_cells}
             )
-            with open(centroids_file) as f:
-                centroids = json.load(f)
             per_vec, kept = incremental_semantic_dedup(
-                spark, index_path, centroids, vecs, threshold,
+                spark, index_path, _read_json(centroids_file), vecs, threshold,
                 id_col=id_col, vec_col=vec_col,
             )
             (per_vec.select(id_col, "is_survivor")
@@ -551,16 +502,11 @@ def _make_semantic_apply(
             n_surv = kept.count()
             append_to_semantic_index(kept, index_path)
         else:
-            if n_vecs < n_cells:
-                raise ValueError(
-                    f"first micro-batch must carry at least n_cells="
-                    f"{n_cells} vectors to train the cell centroids "
-                    f"(got {n_vecs}); lower n_cells or enlarge batch 0"
-                )
+            _require_first_batch(n_vecs, n_cells, "n_cells", "the cell centroids")
             # no pre-freeze here: build_semantic_index below writes the
-            # sidecar itself (overwrite=True) once it has the centroids —
-            # the guard above guarantees len(centroids) == n_cells so the
-            # incremental branch's validation matches on every later batch
+            # params sidecar itself (overwrite=True) — the guard above
+            # guarantees len(centroids) == n_cells so the incremental
+            # branch's validation matches on every later batch
             per_vec = semantic_dedup(
                 vecs, threshold, n_cells, id_col, vec_col, train="first"
             )
@@ -570,11 +516,13 @@ def _make_semantic_apply(
                 vecs, index_path, threshold, n_cells,
                 id_col=id_col, vec_col=vec_col, train="first",
             )
-            _save_centroids(centroids)
+            write_json_atomic(centroids_file, centroids)
             n_surv = spark.read.parquet(slice_dir).where("is_survivor").count()
-        _commit(batch_id, n_vecs=n_vecs, n_survivors=n_surv)
+        return {"n_survivors": n_surv}
 
-    return _apply
+    return _index_stream(
+        index_path, (id_col, vec_col), "n_vecs", {"n_survivors": 0}, step
+    )
 
 
 def start_view_maintenance_stream(
@@ -709,16 +657,26 @@ def _make_bloom_apply(
     text_col: str,
     id_col: str,
 ):
-    """Build the per-micro-batch apply function for the Bloom index stream.
+    """Build the per-micro-batch apply function for the Bloom index stream
+    (module-level so the crash-replay protocol is directly testable).
 
-    Module-level (rather than a closure inside the stream starter) so the
-    crash-replay protocol is directly testable: tests drive batches through
-    it, delete a manifest to simulate a crash inside the append→commit
-    window, and assert the replay's verdicts are untouched."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    Crash safety: the append is idempotent under OR, but the PROBE is not
+    replay-safe against an index that already holds this batch's own bits
+    (every doc would flag ``maybe_in_prior`` against itself, and bits carry
+    no ids to exclude, unlike the fingerprint/chunk/semantic probes).  The
+    verdict slice is therefore the staged commit point: the index is only
+    appended AFTER the slice is written and an explicit staged marker
+    ``<verdicts>.staged/<batch_id>.marker`` is durable.  The slice's Spark
+    ``_SUCCESS`` file is honoured too, for indexes staged by older builds,
+    but is not relied on: clusters running
+    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false`` never write
+    it.  A replay that finds either skips the probe entirely — it writes
+    the marker if it was missing, re-derives the batch's bits map-only
+    (never reading the index), re-ORs them and reuses the durable
+    verdicts.  Every crash window is safe:
+    before the marker the index is untouched (clean recompute); after it
+    the probe never runs again.  On batch 0 the index does not exist
+    before its ``.meta`` sidecar lands, so a replay rebuilds it."""
     from kafka_connect_tablestore_spark.functions.text import doc_fingerprint
     from kafka_connect_tablestore_spark.operators.dedup import (
         _bloom_meta,
@@ -728,64 +686,41 @@ def _make_bloom_apply(
         incremental_bloom_dedup,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
     staged_dir = verdicts_path.rstrip("/") + ".staged"
 
-    def _staged(batch_id: int) -> bool:
-        # own sidecar marker, written by _stage below: the slice's Spark
-        # _SUCCESS file is honored too (older layouts), but is NOT relied
-        # on — clusters running with
-        # mapreduce.fileoutputcommitter.marksuccessfuljobs=false never
-        # write it, which would silently disarm the replay guard and let
-        # a crash-replay re-probe the batch against its own bits
-        slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
-        return os.path.exists(
-            os.path.join(staged_dir, f"{batch_id}.marker")
-        ) or os.path.exists(os.path.join(slice_dir, "_SUCCESS"))
-
-    def _stage(batch_id: int) -> None:
-        os.makedirs(staged_dir, exist_ok=True)
-        final = os.path.join(staged_dir, f"{batch_id}.marker")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-            f.flush()
-            os.fsync(f.fileno())  # the marker disarms the re-probe on
-            # replay: it must never be LESS durable than the index append
-            # it authorizes
-        os.replace(tmp, final)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0, n_flagged=0)
-            return
+    def step(docs: DataFrame, n: int, batch_id: int) -> dict:
         spark = docs.sparkSession
-        slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
-        meta_exists = os.path.exists(index_path.rstrip("/") + ".meta")
-        if meta_exists and _staged(batch_id):
-            # crash-replay after the slice committed: the index may already
-            # hold this batch's bits, so re-probing would flag the whole
-            # batch against itself.  Reuse the durable verdicts, re-derive
-            # the bits map-only (no index read), re-OR (idempotent), commit.
-            m_bits_idx, k_idx = _bloom_meta(index_path)
+        slice_dir = _slice_dir(verdicts_path, batch_id)
+        marker = os.path.join(staged_dir, f"{batch_id}.marker")
+
+        def _stage(verdicts: DataFrame) -> DataFrame:
+            verdicts = verdicts.localCheckpoint(eager=True)
+            verdicts.write.mode("overwrite").parquet(slice_dir)
+            write_json_atomic(marker, batch_id)
+            return verdicts
+
+        if not os.path.exists(index_path.rstrip("/") + ".meta"):
+            _stage(docs.select(
+                F.col(id_col),
+                doc_fingerprint(text_col).alias("fp"),
+                F.lit(False).alias("maybe_in_prior"),
+            ))
+            build_bloom_index(docs, index_path, m_bits, k, text_col)
+            return {"n_flagged": 0}
+        m_bits_idx, k_idx = _bloom_meta(index_path)
+        if os.path.exists(marker) or os.path.exists(
+            os.path.join(slice_dir, "_SUCCESS")
+        ):
+            # crash-replay after staging: re-OR the batch's bits, reuse the
+            # durable verdicts, and record the stage if only _SUCCESS did
+            write_json_atomic(marker, batch_id)
             new_bits = build_bloom_bitset(docs, m_bits_idx, k_idx, text_col)
-            append_to_bloom_index(new_bits, index_path)
-            n_flagged = (
-                spark.read.parquet(slice_dir).where("maybe_in_prior").count()
-            )
-        elif meta_exists:
+            verdicts = spark.read.parquet(slice_dir)
+        else:
             # validate-or-freeze like every other stream: a restart under a
             # different (m_bits, k) would silently probe with the OLD
             # position math while the operator believes the filter was
             # resized — refuse with both parameter sets named
-            m_bits_idx, k_idx = _bloom_meta(index_path)
             if (m_bits_idx, k_idx) != (m_bits, k):
                 raise ValueError(
                     f"bloom index at {index_path} was built with "
@@ -796,24 +731,13 @@ def _make_bloom_apply(
             verdicts, new_bits = incremental_bloom_dedup(
                 spark, index_path, docs, text_col, id_col
             )
-            verdicts = verdicts.localCheckpoint(eager=True)
-            verdicts.write.mode("overwrite").parquet(slice_dir)
-            _stage(batch_id)
-            append_to_bloom_index(new_bits, index_path)
-            n_flagged = verdicts.where("maybe_in_prior").count()
-        else:
-            verdicts = docs.select(
-                F.col(id_col),
-                doc_fingerprint(text_col).alias("fp"),
-                F.lit(False).alias("maybe_in_prior"),
-            ).localCheckpoint(eager=True)
-            verdicts.write.mode("overwrite").parquet(slice_dir)
-            _stage(batch_id)
-            build_bloom_index(docs, index_path, m_bits, k, text_col)
-            n_flagged = 0
-        _commit(batch_id, n_docs=n_docs, n_flagged=n_flagged)
+            verdicts = _stage(verdicts)
+        append_to_bloom_index(new_bits, index_path)
+        return {"n_flagged": verdicts.where("maybe_in_prior").count()}
 
-    return _apply
+    return _index_stream(
+        index_path, (id_col, text_col), "n_docs", {"n_flagged": 0}, step
+    )
 
 
 def start_bloom_index_stream(
@@ -831,35 +755,43 @@ def start_bloom_index_stream(
     query_name: str = "bloom-index-ingest",
 ) -> StreamingQuery:
     """Maintain the persisted Bloom bitset index from a document stream —
-    the streaming twin of the ``incremental_bloom_dedup`` loop (seventh
-    index, sixth stream-driven).  Per micro-batch: probe the index
-    (first batch: everything is definitely-new), write per-doc
-    ``(id, fp, maybe_in_prior)`` verdicts to ``verdicts_path/batch_id=N``
-    with ``overwrite``, append the batch's bitset rows, commit the batch
-    id to the sidecar manifest (tmp + rename).
+    the streaming twin of the ``incremental_bloom_dedup`` loop.
 
-    The append is idempotent under OR, but the PROBE is not replay-safe
-    against an index that already holds this batch's own bits (every doc
-    would flag ``maybe_in_prior`` against itself — and bits carry no ids
-    to exclude, unlike the fingerprint/chunk/semantic probes).  The
-    verdict slice is therefore the staged commit point: the index is only
-    appended AFTER the slice is durable, recorded by an explicit sidecar
-    marker (``<verdicts>.staged/<batch>.marker``, tmp + rename — NOT the
-    slice's Spark ``_SUCCESS`` file, which clusters running
-    ``marksuccessfuljobs=false`` never write; ``_SUCCESS`` is still
-    honored for indexes staged by older builds).  A replay that finds the
-    marker skips the probe entirely — it re-derives
-    the batch's bits map-only (never reading the index) and re-ORs them.
-    Every crash window is safe: before the marker the index is untouched
-    (clean recompute); after it the probe never runs again.  Unlike the
-    fingerprint index there is NO monotone-id precondition: the bitset is
-    a set of content bits, blind to ids and arrival order."""
+    Per micro-batch: probe the index (first batch: everything is
+    definitely-new), write per-doc ``(id, fp, maybe_in_prior)`` verdicts to
+    ``verdicts_path/batch_id=N`` with ``overwrite``, stage them, then append
+    the batch's bitset rows.  Marker fields: ``n_docs``, ``n_flagged``.
+    The staged replay protocol lives on :func:`_make_bloom_apply`.  Unlike
+    the fingerprint index there is NO monotone-id precondition: the bitset
+    is a set of content bits, blind to ids and arrival order."""
     _apply = _make_bloom_apply(
         index_path, verdicts_path, m_bits, k, text_col, id_col
     )
 
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
+    )
+
+
+def _first_vectors(vecs: DataFrame, k: int, id_col: str, vec_col: str) -> list:
+    """The deterministic 'first' trainer: the ``k`` smallest-id vectors."""
+    return [
+        [float(x) for x in r[vec_col]]
+        for r in vecs.orderBy(id_col).limit(k).collect()
+    ]
+
+
+def _overwrite_cells(rows: DataFrame, batch_id: int, index_path: str) -> None:
+    """Land one batch of IVF-family rows as a dynamic partition overwrite
+    of its own ``batch_id=N/cell=C`` slice: a replayed batch rewrites,
+    never duplicates, its rows."""
+    (
+        rows.withColumn("batch_id", F.lit(batch_id))
+        .repartition("cell")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", "cell")
+        .parquet(index_path)
     )
 
 
@@ -875,57 +807,38 @@ def start_ivf_index_stream(
     processing_time: str | None = None,
     query_name: str = "ivf-index-ingest",
 ) -> StreamingQuery:
-    """Maintain the persisted IVF inverted file from an embedding stream —
-    the seventh stream-driven index (LSH, chunk, fingerprint, semantic,
-    view, Bloom, then this; :func:`start_ivfpq_index_stream` adds the
-    PQ-coded variant on the same coarse layer).
+    """Maintain the persisted IVF inverted file from an embedding stream
+    (:func:`start_ivfpq_index_stream` adds the PQ-coded variant on the same
+    coarse layer).  Marker field: ``n_vecs``.
 
     Batch 0 trains the centroids with the same deterministic 'first' rule
     as ``build_ivf_index(train='first')`` (the first ``n_cells`` vectors by
-    id) and persists them in an atomic sidecar JSON — the query-side
-    contract every later batch and every probe reuses.  Under the
-    monotone-id ingest precondition (day 0 holds the smallest ids) those
-    are the same vectors the one-shot batch build would pick, so the
+    id) and freezes them in the ``<index>.centroids.json`` sidecar — the
+    query-side contract every later batch and every probe reuses.  Under
+    the monotone-id ingest precondition (day 0 holds the smallest ids)
+    those are the same vectors the one-shot batch build would pick, so the
     streamed index is content-equal to ``build_ivf_index`` +
     ``append_to_ivf_index`` over the same slices.
 
-    Idempotency is STRUCTURAL here, not manifest-dependent: unlike the
+    Crash safety is STRUCTURAL here, not manifest-dependent: unlike the
     OR-idempotent Bloom bitset or the ANY-match semantic survivors, a
-    duplicated IVF row would occupy a second top-k rank slot at probe
-    time, so blind re-append on crash-replay is NOT safe.  Each batch
-    therefore lands as a dynamic partition overwrite of its own
-    ``batch_id=N/cell=C`` slice — a replayed batch rewrites, never
-    duplicates, its rows (the manifest remains as a fast-skip).  Partition
-    pruning on ``cell`` is unaffected by the extra ``batch_id`` level:
-    ``ann_ivf_indexed_topk``'s probed-cell filter still prunes to the
-    probed directories.
-    """
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
+    duplicated IVF row would occupy a second top-k rank slot at probe time,
+    so blind re-append on replay is NOT safe.  Each batch therefore lands
+    through :func:`_overwrite_cells` (the manifest remains a fast-skip),
+    and a replayed batch 0 re-derives the same centroids from the same
+    rows.  Partition pruning on ``cell`` is unaffected by the extra
+    ``batch_id`` level: ``ann_ivf_indexed_topk``'s probed-cell filter still
+    prunes to the probed directories."""
     from kafka_connect_tablestore_spark.operators.similarity import (
         _norm,
         ivf_assign,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
     centroids_file = index_path.rstrip("/") + ".centroids.json"
 
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        vecs = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        n_vecs = vecs.count()
-        if n_vecs == 0:
-            _commit(batch_id, n_vecs=0)
-            return
+    def step(vecs: DataFrame, n_vecs: int, batch_id: int) -> dict:
         if os.path.exists(centroids_file):
-            with open(centroids_file) as f:
-                centroids = json.load(f)
+            centroids = _read_json(centroids_file)
             if len(centroids) != n_cells:
                 raise ValueError(
                     f"ivf stream n_cells={n_cells} does not match the "
@@ -933,23 +846,9 @@ def start_ivf_index_stream(
                     "with the index's parameters"
                 )
         else:
-            if n_vecs < n_cells:
-                # training fewer centroids than n_cells would permanently
-                # cripple the index (every later vector squeezes into the
-                # few cells batch 0 happened to carry) — refuse loudly
-                raise ValueError(
-                    f"first micro-batch must carry at least n_cells="
-                    f"{n_cells} vectors to train the coarse quantizer "
-                    f"(got {n_vecs}); lower n_cells or enlarge batch 0"
-                )
-            centroids = [
-                [float(x) for x in r[vec_col]]
-                for r in vecs.orderBy(id_col).limit(n_cells).collect()
-            ]
-            tmp = centroids_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(centroids, f)
-            os.replace(tmp, centroids_file)
+            _require_first_batch(n_vecs, n_cells, "n_cells", "the coarse quantizer")
+            centroids = _first_vectors(vecs, n_cells, id_col, vec_col)
+            write_json_atomic(centroids_file, centroids)
         d0 = len(vecs.select(vec_col).first()[0])
         if d0 != len(centroids[0]):
             # len-mismatched dot products zip_with-truncate silently,
@@ -961,22 +860,19 @@ def start_ivf_index_stream(
                 "changed; rebuild the index at a fresh path"
             )
         vd = F.col(vec_col).cast("array<double>")
-        (
+        _overwrite_cells(
             vecs.select(
                 F.col(id_col).alias("neighbor_id"),
                 vd.alias("cv"),
                 _norm(vd).alias("cn"),
                 ivf_assign(F.col(vec_col), centroids).alias("cell"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(index_path)
+            ),
+            batch_id,
+            index_path,
         )
-        _commit(batch_id, n_vecs=n_vecs)
+        return {}
 
+    _apply = _index_stream(index_path, (id_col, vec_col), "n_vecs", {}, step)
     return _start_query(
         vecs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -999,46 +895,32 @@ def start_ivfpq_index_stream(
     query_name: str = "ivfpq-index-ingest",
 ) -> StreamingQuery:
     """Maintain the persisted IVFADC (IVF-PQ) index from an embedding
-    stream — the eighth stream-driven index and the production ANN shape:
-    batch 0 trains BOTH quantizer levels with the deterministic 'first'
-    rules (coarse centroids = first ``n_cells`` vectors by id; PQ
-    codebooks = first ``n_codes`` residuals by id, exactly what
+    stream — the production ANN shape.  Marker field: ``n_vecs``.
+
+    Batch 0 trains BOTH quantizer levels with the deterministic 'first'
+    rules (coarse centroids = first ``n_cells`` vectors by id; PQ codebooks
+    = first ``n_codes`` residuals by id, exactly what
     ``build_ivfpq_index(train='first')`` would pick under the monotone-id
-    ingest precondition) and freezes them in an atomic sidecar JSON — the
-    query-side contract (``ann_ivfpq_indexed_topk``'s ``meta``) that every
-    later batch encodes under, unchanged (retraining mid-stream would
-    silently re-define every previously stored code).
+    ingest precondition) and freezes them in the ``<index>.meta.json``
+    sidecar — the query-side contract (``ann_ivfpq_indexed_topk``'s
+    ``meta``) that every later batch encodes under, unchanged (retraining
+    mid-stream would silently re-define every previously stored code).
 
-    Idempotency is structural, exactly as in ``start_ivf_index_stream``
+    Crash safety is structural, exactly as in ``start_ivf_index_stream``
     and for the same reason (a duplicated row steals a top-k rank slot):
-    each batch lands as a dynamic partition overwrite of its own
-    ``batch_id=N/cell=C`` slice; the manifest is a fast-skip only.
-    Partition pruning on ``cell`` survives the extra level."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
+    each batch lands through :func:`_overwrite_cells`; the manifest is a
+    fast-skip only.  The meta is frozen before batch 0's rows are written,
+    and a replayed batch 0 encodes under it."""
     from kafka_connect_tablestore_spark.operators.similarity import (
         _ivfpq_corpus_plan,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
     meta_file = index_path.rstrip("/") + ".meta.json"
 
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        vecs = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        n_vecs = vecs.count()
-        if n_vecs == 0:
-            _commit(batch_id, n_vecs=0)
-            return
-        if os.path.exists(meta_file):
-            with open(meta_file) as f:
-                meta = json.load(f)
+    def step(vecs: DataFrame, n_vecs: int, batch_id: int) -> dict:
+        frozen = os.path.exists(meta_file)
+        if frozen:
+            meta = _read_json(meta_file)
             centroids, codebooks = meta["centroids"], meta["codebooks"]
             # the persisted meta is the encoding contract; encoding a later
             # batch under different parameters would silently re-define the
@@ -1058,17 +940,11 @@ def start_ivfpq_index_stream(
                     "restart with the index's parameters"
                 )
         else:
-            if n_vecs < max(n_cells, n_codes):
-                raise ValueError(
-                    f"first micro-batch must carry at least "
-                    f"max(n_cells, n_codes)={max(n_cells, n_codes)} vectors "
-                    f"to train both quantizer levels (got {n_vecs}); lower "
-                    "them or enlarge batch 0"
-                )
-            centroids = [
-                [float(x) for x in r[vec_col]]
-                for r in vecs.orderBy(id_col).limit(n_cells).collect()
-            ]
+            _require_first_batch(
+                n_vecs, max(n_cells, n_codes), "max(n_cells, n_codes)",
+                "both quantizer levels",
+            )
+            centroids = _first_vectors(vecs, n_cells, id_col, vec_col)
             codebooks = None  # batch 0 trains them inside the encode plan
         d0 = len(vecs.select(vec_col).first()[0])
         if d0 != dim or dim % m != 0:
@@ -1086,24 +962,15 @@ def start_ivfpq_index_stream(
             vecs, centroids, m, n_codes, dim, id_col, vec_col,
             "first", encode, codebooks=codebooks,
         )
-        if not os.path.exists(meta_file):
-            tmp = meta_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"centroids": centroids, "codebooks": codebooks,
-                     "encode": encode}, f,
-                )
-            os.replace(tmp, meta_file)
-        (
-            corpus.withColumn("batch_id", F.lit(batch_id))
-            .repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(index_path)
-        )
-        _commit(batch_id, n_vecs=n_vecs)
+        if not frozen:
+            write_json_atomic(
+                meta_file,
+                {"centroids": centroids, "codebooks": codebooks, "encode": encode},
+            )
+        _overwrite_cells(corpus, batch_id, index_path)
+        return {}
 
+    _apply = _index_stream(index_path, (id_col, vec_col), "n_vecs", {}, step)
     return _start_query(
         vecs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )

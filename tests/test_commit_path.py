@@ -83,3 +83,31 @@ def test_lineage_modes_agree_on_errant_batch(spark, tmp_path):
 
     assert dlq_parts == dlq_glob == glob["errant_rows"]
     assert state_parts == state_glob and state_parts
+
+
+def test_apply_batch_job_counts_match_readme(spark, tmp_path):
+    """README's scale posture states the Spark jobs one micro-batch runs on
+    the default config: 3 for a clean batch (AQE submits each shuffle map
+    stage as its own job), on a first load and on a merge alike, and 4 when
+    the batch carries dead letters (the DLQ append)."""
+    cfg = SinkConfig(tolerance=RuntimeErrorTolerance.ALL)
+    eng = CdcEngine(spark, cfg, str(tmp_path / "lake"))
+    sc = spark.sparkContext
+    batches = [
+        ("first-load", synth_changelog(spark, 2000, seed=21, n_partitions=4)),
+        ("merge", synth_changelog(spark, 2000, seed=22, n_partitions=4)),
+        (
+            "dead-letters",
+            synth_changelog(spark, 2000, seed=23, n_partitions=4, p_malformed=0.05),
+        ),
+    ]
+    jobs = {}
+    for name, events in batches:
+        group = f"job-count-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            eng.apply_batch(events, name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {"first-load": 3, "merge": 3, "dead-letters": 4}

@@ -1,14 +1,10 @@
-"""Config/iceberg/pipeline review hardening (round-5 final review — config
-came out clean): Iceberg backend parity with the fallback LakeTable, the
-trigger-precedence trap, the bloom geometry guard, and the semantic
-freeze-order fix.
+"""Config/iceberg review hardening (round-5 final review — config came
+out clean): Iceberg backend parity with the fallback LakeTable.  The
+pipeline half of that review (trigger precedence, the bloom geometry
+guard, the semantic freeze order) lives in ``tests/test_index_streams.py``.
 """
 
 from __future__ import annotations
-
-import os
-
-import pytest
 
 from kafka_connect_tablestore_spark.config import SinkConfig
 from kafka_connect_tablestore_spark.lake.iceberg import create_table_sql, merge_sql
@@ -28,50 +24,3 @@ def test_iceberg_create_honours_pk_types():
     cfg = SinkConfig(pk_fields=("id",), pk_types=("long",))
     assert "(id long," in create_table_sql("t", cfg, {})
     assert "_deleted boolean" in create_table_sql("t", cfg, {})
-
-
-def test_trigger_conflict_refused(spark, tmp_path):
-    """processing_time with the default available_now=True previously lost
-    silently (the stream drained once and stopped); now it is refused."""
-    from kafka_connect_tablestore_spark.streaming.pipeline import _start_query
-
-    with pytest.raises(ValueError, match="available_now"):
-        _start_query(None, None, str(tmp_path), "q", True, "5 seconds")
-
-
-def test_bloom_stream_refuses_geometry_change(spark, tmp_path):
-    from kafka_connect_tablestore_spark.operators.dedup import build_bloom_index
-    from kafka_connect_tablestore_spark.streaming.pipeline import _make_bloom_apply
-
-    idx = str(tmp_path / "bloom")
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(20)], "doc_id long, text string"
-    )
-    build_bloom_index(docs, idx, m_bits=1 << 12, k=3)
-    apply = _make_bloom_apply(
-        idx, str(tmp_path / "v"), 1 << 14, 5, "text", "doc_id"
-    )
-    with pytest.raises(ValueError, match="m_bits=4096, k=3"):
-        apply(docs, 0)
-
-
-def test_semantic_stream_guard_fires_before_freeze(spark, tmp_path):
-    """A failed batch-0 (too few vectors) must NOT leave a params sidecar:
-    restarting with the error's own advice (lower n_cells) then worked
-    only if no bogus sidecar was frozen for a never-built index."""
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        _make_semantic_apply,
-    )
-
-    idx = str(tmp_path / "sem")
-    vecs = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(4)], "vec_id long, embedding array<double>"
-    )
-    apply = _make_semantic_apply(idx, str(tmp_path / "v"), 0.9, 16, "vec_id", "embedding")
-    with pytest.raises(ValueError, match="lower n_cells"):
-        apply(vecs, 0)
-    assert not os.path.exists(idx.rstrip("/") + ".params.json")
-    # following the advice now works
-    apply2 = _make_semantic_apply(idx, str(tmp_path / "v"), 0.9, 4, "vec_id", "embedding")
-    apply2(vecs, 0)
-    assert os.path.exists(idx.rstrip("/") + ".params.json")

@@ -1,22 +1,15 @@
-"""Second closing review pass over streaming/pipeline.py: batch-id
-namespacing, the params sidecar guard, the config-independent Bloom
-staged marker, and the IVF/IVF-PQ dimension checks."""
+"""Second closing review pass over streaming/pipeline.py: the params
+sidecar guard.  The stream-driver tests of that pass (batch-id namespacing,
+the Bloom staged marker, the IVF/IVF-PQ dimension checks) live in
+``tests/test_index_streams.py``."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from kafka_connect_tablestore_spark.config import DeleteMode, SinkConfig
-from kafka_connect_tablestore_spark.engine import CdcEngine
-from kafka_connect_tablestore_spark.sources.synth import synth_changelog
-from kafka_connect_tablestore_spark.streaming.pipeline import (
-    _ensure_index_params,
-    start_cdc_stream,
-)
+from kafka_connect_tablestore_spark.streaming.pipeline import _ensure_index_params
 
 
 def test_ensure_index_params_freezes_then_rejects(tmp_path):
@@ -29,203 +22,3 @@ def test_ensure_index_params_freezes_then_rejects(tmp_path):
     # sidecar is durable, tmp cleaned up
     assert os.path.exists(idx + ".params.json")
     assert not os.path.exists(idx + ".params.json.tmp")
-
-
-def test_fingerprint_stream_rejects_param_drift(spark, tmp_path):
-    """A restart under a different n_buckets must fail loudly instead of
-    silently bucket-pruning true hits away and poisoning the index."""
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        start_fingerprint_index_stream,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"text number {i % 10} body") for i in range(40)],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "src")
-    docs.where("doc_id < 20").coalesce(1).write.parquet(
-        os.path.join(src, "day0")
-    )
-    idx = str(tmp_path / "fp_idx")
-    verd = str(tmp_path / "verd")
-
-    def _stream():
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-
-    q = start_fingerprint_index_stream(
-        _stream(), idx, verd, str(tmp_path / "ckpt0"), n_buckets=64
-    )
-    q.awaitTermination(300)
-    assert q.exception() is None
-
-    # the daily-restart-with-drifted-config shape: new data arrives, the
-    # stream restarts under a different n_buckets (fresh checkpoint: its
-    # batch 0 replays day0 and is absorbed by the shared manifest; day1
-    # becomes its first REAL batch and must hit the params guard)
-    docs.where("doc_id >= 20").coalesce(1).write.parquet(
-        os.path.join(src, "day1")
-    )
-    q2 = start_fingerprint_index_stream(
-        _stream(), idx, verd, str(tmp_path / "ckpt1"), n_buckets=32
-    )
-    try:
-        q2.awaitTermination(300)
-    except Exception:
-        pass
-    exc = q2.exception()
-    assert exc is not None and "parameters" in str(exc)
-    # the index itself is untouched by the refused stream
-    assert json.load(open(idx + ".params.json")) == {"n_buckets": 64}
-
-
-def test_bloom_staged_marker_fires_without_success_file(spark, tmp_path):
-    """The replay guard must not depend on Spark's _SUCCESS marker
-    (absent under marksuccessfuljobs=false): with _SUCCESS deleted, the
-    sidecar marker alone must stop the self-contaminating re-probe."""
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        _make_bloom_apply,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"doc body {i % 30} text") for i in range(50)],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "bloom_idx")
-    verd = str(tmp_path / "verd")
-    apply = _make_bloom_apply(idx, verd, 1 << 16, 4, "text", "doc_id")
-    apply(docs.where("doc_id < 25"), 0)
-    apply(docs.where("doc_id >= 25"), 1)
-    slice1 = os.path.join(verd, "batch_id=1")
-    clean = {
-        (r["doc_id"], r["maybe_in_prior"])
-        for r in spark.read.parquet(slice1).collect()
-    }
-    assert any(f for _, f in clean) and any(not f for _, f in clean)
-    # marker written by the staged commit
-    assert os.path.exists(os.path.join(verd + ".staged", "1.marker"))
-
-    # simulate a marksuccessfuljobs=false cluster + crash before commit
-    success = os.path.join(slice1, "_SUCCESS")
-    if os.path.exists(success):
-        os.remove(success)
-    os.remove(os.path.join(idx + ".batches", "1.json"))
-    apply(docs.where("doc_id >= 25"), 1)
-    replayed = {
-        (r["doc_id"], r["maybe_in_prior"])
-        for r in spark.read.parquet(slice1).collect()
-    }
-    assert replayed == clean  # guard fired: NOT all flagged against self
-
-
-def test_ivf_stream_rejects_dim_change(spark, tmp_path):
-    """An embedding-model change (different vector length, same n_cells)
-    must raise instead of silently truncating dot products."""
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        start_ivf_index_stream,
-    )
-
-    v2 = spark.createDataFrame(
-        [(i, [float(i % 3), float(i % 5)]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    v3 = spark.createDataFrame(
-        [(100 + i, [1.0, 2.0, 3.0]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    src = str(tmp_path / "s2")
-    v2.coalesce(1).write.parquet(os.path.join(src, "d0"))
-    idx = str(tmp_path / "ivf_idx")
-
-    def _stream():
-        return (
-            spark.readStream.schema(v2.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-
-    q = start_ivf_index_stream(_stream(), idx, str(tmp_path / "ck0"), n_cells=4)
-    q.awaitTermination(300)
-    assert q.exception() is None
-
-    # the model changed: 3-dim vectors arrive as a new file; the restarted
-    # stream's fresh-checkpoint batch 0 replays d0 (manifest no-op) and
-    # the 3-dim batch must hit the dim check
-    v3.coalesce(1).write.parquet(os.path.join(src, "d1"))
-    q2 = start_ivf_index_stream(_stream(), idx, str(tmp_path / "ck1"), n_cells=4)
-    try:
-        q2.awaitTermination(300)
-    except Exception:
-        pass
-    exc = q2.exception()
-    assert exc is not None and "embedding model" in str(exc)
-
-
-def test_ivfpq_stream_rejects_wrong_dim_on_batch0(spark, tmp_path):
-    """Batch 0 with dim != actual vector length must fail fast, not train
-    silently-truncated codebooks into the frozen meta."""
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        start_ivfpq_index_stream,
-    )
-
-    v4 = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.0, 2.0]) for i in range(20)],
-        "vec_id long, embedding array<float>",
-    )
-    src = str(tmp_path / "s4")
-    v4.coalesce(1).write.parquet(os.path.join(src, "d0"))
-    q = start_ivfpq_index_stream(
-        spark.readStream.schema(v4.schema).parquet(src + "/*"),
-        str(tmp_path / "pq_idx"),
-        str(tmp_path / "ck"),
-        n_cells=4,
-        m=2,
-        n_codes=4,
-        dim=8,  # wrong: vectors are 4-dim
-    )
-    try:
-        q.awaitTermination(300)
-    except Exception:
-        pass
-    exc = q.exception()
-    assert exc is not None and "actual vector length" in str(exc)
-    # nothing frozen: the meta must not exist after the refused batch 0
-    assert not os.path.exists(str(tmp_path / "pq_idx") + ".meta.json")
-
-
-def test_cdc_stream_batch_ids_namespaced_by_query_name(spark, tmp_path):
-    """Two entry points (or two streams) feeding one engine must not
-    collide in the lake's committed-batch ledger."""
-    cfg = SinkConfig(delete_mode=DeleteMode.ROW)
-    events = synth_changelog(spark, 500, seed=5, n_repos=5).cache()
-    src = str(tmp_path / "src")
-    events.coalesce(1).write.parquet(os.path.join(src, "f0"))
-    eng = CdcEngine(spark, cfg, str(tmp_path / "lake"))
-    q = start_cdc_stream(
-        spark.readStream.schema(events.schema).parquet(src + "/*"),
-        eng,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(300)
-    batches = eng.table.snapshot()["batches"]
-    assert batches and all(b.startswith("cdc-ingest-") for b in batches)
-    # a fresh stream under another query_name restarts its foreachBatch
-    # ids at 0 WITHOUT hitting the first stream's ledger entries
-    more = synth_changelog(spark, 200, seed=6, n_repos=5)
-    src2 = str(tmp_path / "src2")
-    more.coalesce(1).write.parquet(os.path.join(src2, "f0"))
-    v = eng.table.current_version()
-    q2 = start_cdc_stream(
-        spark.readStream.schema(events.schema).parquet(src2 + "/*"),
-        eng,
-        str(tmp_path / "ckpt2"),
-        query_name="cdc-ingest-b",
-    )
-    q2.awaitTermination(300)
-    assert eng.table.current_version() > v  # applied, not skipped
-    assert any(
-        b.startswith("cdc-ingest-b-") for b in eng.table.snapshot()["batches"]
-    )

@@ -1,7 +1,8 @@
 """Round-5 second-review fixes: crash-replay self-contamination of the
-incremental index probes, the Bloom stream's staged replay protocol, the
-IVF-family stream parameter guards, asof_enrich's attribute typing, and
-snapshot_diff with no attribute columns.
+incremental index probes, asof_enrich's attribute typing, and
+snapshot_diff with no attribute columns.  The stream-driver half of that
+review (the Bloom stream's staged replay protocol, the IVF-family stream
+parameter guards) lives in ``tests/test_index_streams.py``.
 
 The contamination scenario all four probe fixes share: a stream crashes
 in the window between "append this batch's rows to the index" and "commit
@@ -13,11 +14,9 @@ verdict slice overwrites the correct one.
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _docs(spark, n=60, dup_every=5):
@@ -145,175 +144,6 @@ def test_incremental_semantic_dedup_replay_self_exclusion(spark, tmp_path):
     )
     got = {(r["vec_id"], r["is_survivor"]) for r in per1.collect()}
     assert got == want  # survivors are NOT dominated by their own copies
-
-
-# ---------------------------------------------------------------------------
-# bloom stream: staged replay protocol (the bitset has no ids to exclude)
-# ---------------------------------------------------------------------------
-
-def _bloom_bitset(spark, path):
-    return {
-        (r["word_idx"], r["word"])
-        for r in (
-            spark.read.parquet(path)
-            .groupBy("word_idx")
-            .agg(F.bit_or("word").alias("word"))
-            .collect()
-        )
-    }
-
-
-def test_bloom_apply_replay_after_append_crash(spark, tmp_path):
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        _make_bloom_apply,
-    )
-
-    idx = str(tmp_path / "bloom_idx")
-    verdicts = str(tmp_path / "verdicts")
-    apply = _make_bloom_apply(idx, verdicts, 1 << 16, 4, "text", "doc_id")
-
-    d = _docs(spark)
-    apply(d.where("doc_id < 20"), 0)
-    apply(d.where("doc_id >= 20 and doc_id < 40"), 1)
-    clean = {
-        (r["doc_id"], r["maybe_in_prior"])
-        for r in spark.read.parquet(os.path.join(verdicts, "batch_id=1")).collect()
-    }
-    assert any(f for _, f in clean) and any(not f for _, f in clean)
-    bits_clean = _bloom_bitset(spark, idx)
-
-    # crash between append and commit: drop batch 1's manifest and replay
-    os.remove(os.path.join(idx.rstrip("/") + ".batches", "1.json"))
-    apply(d.where("doc_id >= 20 and doc_id < 40"), 1)
-    replayed = {
-        (r["doc_id"], r["maybe_in_prior"])
-        for r in spark.read.parquet(os.path.join(verdicts, "batch_id=1")).collect()
-    }
-    assert replayed == clean  # NOT all maybe_in_prior=True
-    assert _bloom_bitset(spark, idx) == bits_clean  # re-OR is a no-op
-    with open(os.path.join(idx.rstrip("/") + ".batches", "1.json")) as f:
-        assert json.load(f)["n_flagged"] == sum(f for _, f in clean)
-
-    # and the stream continues correctly past the replay
-    apply(d.where("doc_id >= 40"), 2)
-    b2 = {
-        (r["doc_id"], r["maybe_in_prior"])
-        for r in spark.read.parquet(os.path.join(verdicts, "batch_id=2")).collect()
-    }
-    assert (40, True) in b2 and (41, False) in b2
-
-
-def test_bloom_apply_replay_before_append(spark, tmp_path):
-    """Crash between the slice write and the append: the staged path must
-    OR the batch's bits in (first time) and commit."""
-    from kafka_connect_tablestore_spark.operators.dedup import (
-        incremental_bloom_dedup,
-    )
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        _make_bloom_apply,
-    )
-
-    idx = str(tmp_path / "bloom_idx")
-    verdicts = str(tmp_path / "verdicts")
-    apply = _make_bloom_apply(idx, verdicts, 1 << 16, 4, "text", "doc_id")
-    d = _docs(spark)
-    apply(d.where("doc_id < 20"), 0)
-
-    # stage batch 1's verdict slice by hand, crash before the append
-    batch1 = d.where("doc_id >= 20 and doc_id < 40")
-    v, _bits = incremental_bloom_dedup(spark, idx, batch1)
-    v.write.mode("overwrite").parquet(os.path.join(verdicts, "batch_id=1"))
-    bits_before = _bloom_bitset(spark, idx)
-
-    apply(batch1, 1)  # replay: skips the probe, appends, commits
-    assert _bloom_bitset(spark, idx) != bits_before  # bits actually landed
-    assert os.path.exists(
-        os.path.join(idx.rstrip("/") + ".batches", "1.json")
-    )
-    # batch 2 sees batch 1's content as prior
-    apply(d.where("doc_id >= 40"), 2)
-    b2 = {
-        (r["doc_id"], r["maybe_in_prior"])
-        for r in spark.read.parquet(os.path.join(verdicts, "batch_id=2")).collect()
-    }
-    assert (40, True) in b2 and (41, False) in b2
-
-
-# ---------------------------------------------------------------------------
-# IVF-family stream guards
-# ---------------------------------------------------------------------------
-
-def _vec_stream(spark, tmp_path, slices, name="src"):
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    vecs = (
-        spark.read.parquet(f"{sf}/embeddings.parquet")
-        .select("vec_id", "embedding")
-    )
-    src = str(tmp_path / name)
-    for i, (lo, hi) in enumerate(slices):
-        vecs.where(f"vec_id >= {lo} and vec_id < {hi}").coalesce(1).write.parquet(
-            os.path.join(src, f"day{i}")
-        )
-    return (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-
-
-def test_ivf_stream_rejects_undersized_first_batch(spark, tmp_path):
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        start_ivf_index_stream,
-    )
-
-    stream = _vec_stream(spark, tmp_path, [(0, 4)])
-    q = start_ivf_index_stream(
-        stream, str(tmp_path / "idx"), str(tmp_path / "ckpt"), n_cells=16
-    )
-    with pytest.raises(Exception, match="at least n_cells"):
-        q.awaitTermination(300)
-
-
-def test_ivfpq_stream_rejects_meta_mismatch(spark, tmp_path):
-    from kafka_connect_tablestore_spark.streaming.pipeline import (
-        start_ivfpq_index_stream,
-    )
-
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    vecs = spark.read.parquet(f"{sf}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    src = str(tmp_path / "src")
-    vecs.where("vec_id < 125").coalesce(1).write.parquet(
-        os.path.join(src, "day0")
-    )
-    idx = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-
-    def _stream():
-        return (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-
-    q = start_ivfpq_index_stream(
-        _stream(), idx, ckpt, n_cells=8, m=4, n_codes=16, dim=64
-    )
-    q.awaitTermination(300)
-    assert os.path.exists(idx + ".meta.json")
-
-    # new day arrives; the operator restarts the stream (same checkpoint)
-    # with a different m: every new row would be encoded under an
-    # incompatible scheme — the stream must refuse, not silently corrupt
-    vecs.where("vec_id >= 125 and vec_id < 250").coalesce(1).write.parquet(
-        os.path.join(src, "day1")
-    )
-    q2 = start_ivfpq_index_stream(
-        _stream(), idx, ckpt, n_cells=8, m=8, n_codes=16, dim=64
-    )
-    with pytest.raises(Exception, match="do not match the persisted"):
-        q2.awaitTermination(300)
 
 
 # ---------------------------------------------------------------------------
